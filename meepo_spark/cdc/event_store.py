@@ -9,8 +9,10 @@ query(event, pk)     → last-change ts per pk (max aggregate)
 
 100 TB posture: the log partitions by event_date (replay cost ∝ the
 time range, never the log length); compaction keeps a separate
-latest-snapshot table so point lookups don't scan history; files
-target 128–512 MB via coalesce at write.
+latest-snapshot table so point lookups don't scan history. Writes do
+not coalesce: each write task emits one file per event_date it holds,
+so file size follows the batch's partitioning; only
+``compact_txn_clustered`` sizes its files to a byte target.
 """
 
 from __future__ import annotations
@@ -225,6 +227,8 @@ class TransactionalEventStore(EventStore):
         from meepo_spark.cdc.commit_log import CommitLog
 
         self.commits = CommitLog(path)
+        # per read lane: (member keys, {key: scan frame}, union frame)
+        self._unions: dict[str, tuple[tuple, dict, DataFrame]] = {}
 
     def _epoch_dir(self, epoch_id: int) -> str:
         """A fresh WRITER-UNIQUE attempt dir for this epoch:
@@ -345,9 +349,16 @@ class TransactionalEventStore(EventStore):
         would conflict) unioned by name: predicate/partition pruning
         applies per scan, and compaction keeps the union width at
         1 + epochs-since-compaction, so the plan never grows without
-        bound."""
-        from functools import reduce
+        bound.
 
+        The manifest is read on every call, but the frame is cached on
+        ``tuple(commits.files())``: while the live file set is
+        unchanged the same union is returned, and a new commit builds
+        a scan only for its new dir (see ``_union_of``). This relies
+        on two invariants of the commit protocol: a committed attempt
+        or snapshot dir is never rewritten (every write goes to a
+        fresh writer-unique dir), and ``vacuum_orphans`` removes only
+        dirs no live manifest names."""
         dirs = self.commits.files()
         if not dirs:
             return self.spark.createDataFrame([], LOG_SCHEMA)
@@ -357,13 +368,37 @@ class TransactionalEventStore(EventStore):
         # raise "Unable to infer schema" there and poison every read of
         # the store. With the schema pinned, an empty dir is just an
         # empty scan.
-        scans = [
-            self.spark.read.schema(LOG_SCHEMA)
+        return self._union_of(
+            "log",
+            tuple(dirs),
+            lambda d: self.spark.read.schema(LOG_SCHEMA)
             .parquet(d)
-            .select(*[f.name for f in LOG_SCHEMA.fields])
-            for d in dirs
-        ]
-        return reduce(lambda a, b: a.unionByName(b), scans)
+            .select(*[f.name for f in LOG_SCHEMA.fields]),
+        )
+
+    def _union_of(self, lane: str, keys: tuple, scan, **union_kw) -> DataFrame:
+        """The by-name union of one scan per committed dir, built once
+        per live file set. ``keys`` holds one hashable key per live dir
+        in manifest order; ``scan(key)`` builds that dir's frame. The
+        union is returned as is while ``keys`` is unchanged; otherwise
+        member scans are kept for keys still live, built for new ones,
+        and dropped for dirs that left the manifest (compaction).
+        Plans are reused, not data: nothing is persisted. ``lane``
+        keeps the untyped and typed reads of one store apart. Racing
+        callers may each build a union, but every stored entry is one
+        consistent (keys, scans, union) tuple, so a race costs a
+        rebuild, never a frame of another file set."""
+        from functools import reduce
+
+        cached_keys, cached, union = self._unions.get(lane, ((), {}, None))
+        if keys == cached_keys:
+            return union
+        scans = {k: cached[k] if k in cached else scan(k) for k in keys}
+        union = reduce(
+            lambda a, b: a.unionByName(b, **union_kw), (scans[k] for k in keys)
+        )
+        self._unions[lane] = (keys, scans, union)
+        return union
 
     # --- maintenance --------------------------------------------------
     def compact_txn(self) -> DataFrame:
@@ -583,21 +618,18 @@ class TypedTransactionalEventStore(TransactionalEventStore):
         under the exact schema of the version it was written with
         (pinned, never inferred), then mixed versions re-merge by name
         — the superset struct of the newest version involved, old
-        epochs null-filled."""
-        from functools import reduce
-
+        epochs null-filled. Cached like ``log()``, keyed on the
+        ``(dir, registry_version)`` pairs of the live file set."""
         fv = self._file_versions()
         if not fv:
             return self.spark.createDataFrame([], self.typed_schema(max(self.registry)))
-        scans = [
-            self.spark.read.schema(self.typed_schema(v))
-            .parquet(d)
-            .select(*[f.name for f in self.typed_schema(v).fields])
-            for d, v in fv
-        ]
-        return reduce(
-            lambda a, b: a.unionByName(b, allowMissingColumns=True), scans
-        )
+
+        def scan(dv: tuple[str, int]) -> DataFrame:
+            d, v = dv
+            schema = self.typed_schema(v)
+            return self.spark.read.schema(schema).parquet(d).select(*schema.fieldNames())
+
+        return self._union_of("typed", tuple(fv), scan, allowMissingColumns=True)
 
     def _latest_typed(self) -> tuple[DataFrame, int]:
         """Latest non-delete image per (table, pk) KEEPING row_t —

@@ -52,15 +52,6 @@ class Fanout:
         return queries
 
 
-def console_sub(changes: DataFrame, checkpoint: str):
-    """meepo's print_sub (A5): debug sink."""
-    return (
-        changes.writeStream.format("console")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-    )
-
-
 def payload_expr():
     """THE wire-format contract for A6/A11 broadcasts —
     '{table}_{action} {pk}' — as a Column, shared by every publisher

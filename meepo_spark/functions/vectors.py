@@ -52,10 +52,3 @@ def cosine_with_norms(a: Column, b: Column, na: Column, nb: Column) -> Column:
     once per ROW instead of once per PAIR, cutting the higher-order
     -function work per pair from three 64-element folds to one."""
     return dot(a, b) / (na * nb)
-
-
-def l2_normalize(a: Column) -> Column:
-    """Pre-normalize once so downstream similarity is a plain dot —
-    at scale, normalize at ingest and store the normalized vector."""
-    n = norm(a)
-    return F.transform(as_double(a), lambda x: x / n)

@@ -248,8 +248,3 @@ def simhash(
             ).otherwise(F.lit(0).cast("long"))
         )
     return summed.select("id", sim.alias("simhash"))
-
-
-def hamming64(a, b):
-    """Popcount of XOR — Hamming distance between two hash columns."""
-    return F.bit_count(a.bitwiseXOR(b))

@@ -619,3 +619,38 @@ def test_zombie_writer_commit_after_vacuum_fails_loudly(spark, tmp_path, monkeyp
     assert store.log().count() == 0
     assert store.append_epoch(ch, 0) is True
     assert store.log().count() == ch.count()
+
+
+def test_log_frame_is_built_once_per_manifest_file_set(spark, tmp_path):
+    """log() reads the manifest on every call but builds each committed
+    dir's scan once: the same frame while the file set is unchanged; a
+    commit adds a scan for the new dir only; after compaction and a
+    zero-grace vacuum only live dirs stay cached and reads are intact."""
+    ch = events_as_changes(spark, SF_DIR).limit(120)
+    store = TransactionalEventStore(spark, str(tmp_path / "cache"))
+    e0 = ch.filter(F.col("offset") % 2 == 0)
+    assert store.append_epoch(e0, 0) is True
+    first = store.log()
+    assert store.log() is first
+    assert first.count() == e0.count()
+    (d0,) = store.commits.files()
+    scan0 = store._unions["log"][1][d0]
+
+    assert store.append_epoch(ch.filter(F.col("offset") % 2 == 1), 1) is True
+    second = store.log()
+    assert second is not first and second.count() == ch.count()
+    assert store._unions["log"][1][d0] is scan0, "a live dir's scan was rebuilt"
+    assert store.log() is second
+
+    want = (  # latest non-delete image per key: what compact_txn keeps
+        second.groupBy("schema_name", "table", "pk")
+        .agg(F.max_by(F.col("action"), F.struct("ts", "offset")).alias("a"))
+        .filter(F.col("a") != "delete")
+        .count()
+    )
+    store.compact_txn()
+    assert store.vacuum_orphans(grace_seconds=0.0), "replaced epoch dirs must go"
+    keys, scans, _ = store._unions["log"]
+    assert keys == tuple(store.commits.files()) and set(scans) == set(keys)
+    assert all(os.path.isdir(d) for d in scans)
+    assert store.log().count() == want

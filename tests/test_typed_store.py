@@ -4,6 +4,8 @@ drift, empty-epoch poison, redelivery, and typed compaction."""
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 
 from meepo_spark.cdc.event_store import TransactionalEventStore, TypedTransactionalEventStore
@@ -258,3 +260,35 @@ def test_clustered_compaction_layout_and_pruning(spark, tmp_path):
     meta = store.commits._read()["compaction"]
     assert meta["layout"]["zorder"] == ["table", "pk_num"]
     assert store.typed_log().count() == n_latest
+
+
+def test_typed_log_frame_is_built_once_per_manifest_file_set(spark, tmp_path):
+    """typed_log() shares log()'s cache mechanism, keyed on (dir,
+    registry_version), in its own lane: untyped reads of the same store
+    do not evict it. After compaction and a zero-grace vacuum only the
+    live snapshot stays cached."""
+    ch, v1, v2 = _producers(spark)
+    store = TypedTransactionalEventStore(spark, str(tmp_path / "tcache"))
+    assert store.append_epoch(v1, 0, registry_version=1) is True
+    first = store.typed_log()
+    assert store.typed_log() is first
+    assert store.log() is store.log() and store.typed_log() is first
+
+    assert store.append_epoch(v2, 1, registry_version=2) is True
+    second = store.typed_log()
+    assert second is not first and second.count() == ch.count()
+    assert "source_offset" in second.schema["row_t"].dataType.fieldNames()
+    assert store.typed_log() is second
+
+    want = (
+        second.groupBy("table", "pk")
+        .agg(F.max_by(F.col("action"), F.struct("ts", "offset")).alias("a"))
+        .filter(F.col("a") != "delete")
+        .count()
+    )
+    store.compact_txn()
+    assert store.vacuum_orphans(grace_seconds=0.0)
+    keys, scans, _ = store._unions["typed"]
+    assert keys == tuple(store._file_versions()) and set(scans) == set(keys)
+    assert all(os.path.isdir(d) for d, _ in scans)
+    assert store.typed_log().count() == want
