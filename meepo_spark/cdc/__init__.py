@@ -4,8 +4,11 @@
   signals (blinker pub/sub)        → one source stream + N writeStream
                                      sinks (fanout.py)
   RedisEventStore (ZSET add/replay/query)
-                                   → partitioned parquet event store
-                                     (event_store.py)
+                                   → one event store,
+                                     TransactionalEventStore: a
+                                     date-partitioned parquet log made
+                                     visible by manifest commits
+                                     (event_store.py, commit_log.py)
   RedisPrepareCommit (2-phase gate) → txn envelope + committed-txn
                                      anti-join + idempotent foreachBatch
                                      (exactly_once.py)

@@ -49,7 +49,6 @@ import socket
 import uuid
 
 MANIFEST_PREFIX = "_commits-"
-LEGACY_MANIFEST = "_commits.json"
 KEEP_VERSIONS = 8
 _EMPTY = {"version": 0, "epochs": {}, "files": []}
 
@@ -94,31 +93,15 @@ class CommitLog:
         # prune the version we listed as max (the docstring's "max is
         # never pruned" holds only at list time — code-review r6). The
         # standard Delta-reader pattern: re-list and re-open.
-        legacy = os.path.join(self.root, LEGACY_MANIFEST)
         for _ in range(8):
             vs = self._versions()
-            if vs:
-                try:
-                    with open(
-                        os.path.join(self.root, _manifest_name(vs[-1]))
-                    ) as fh:
-                        return json.load(fh)
-                except FileNotFoundError:
-                    continue  # rival prune won; re-list
-            else:
-                try:  # pre-r6 single-file layout
-                    with open(legacy) as fh:
-                        return json.load(fh)
-                except FileNotFoundError:
-                    # Either a genuinely fresh store, or a rival just
-                    # landed the FIRST versioned commit and its _prune
-                    # unlinked the legacy file between our listdir and
-                    # this open — re-list before concluding "empty"
-                    # (code-review r6b: returning _EMPTY here made a
-                    # committed table transiently read as empty).
-                    if self._versions():
-                        continue
-                    return json.loads(json.dumps(_EMPTY))
+            if not vs:
+                return json.loads(json.dumps(_EMPTY))
+            try:
+                with open(os.path.join(self.root, _manifest_name(vs[-1]))) as fh:
+                    return json.load(fh)
+            except FileNotFoundError:
+                continue  # rival prune won; re-list
         raise ConcurrentCommitError(
             "manifest read lost the list-then-open race 8 times — "
             "pathological write contention; raise KEEP_VERSIONS"
@@ -174,23 +157,15 @@ class CommitLog:
         self._prune(state["version"])
 
     def _prune(self, current: int) -> None:
-        """Drop manifest versions older than the retention window (and
-        the legacy single-file manifest once a versioned commit
-        supersedes it). Readers always load the max version, so
-        pruning strictly-older files never races them."""
+        """Drop manifest versions older than the retention window.
+        Readers always load the max version, so pruning strictly-older
+        files never races them."""
         for v in self._versions():
             if v <= current - KEEP_VERSIONS:
                 try:
                     os.unlink(os.path.join(self.root, _manifest_name(v)))
                 except FileNotFoundError:
                     pass  # a rival's prune got there first
-        legacy = os.path.join(self.root, LEGACY_MANIFEST)
-        try:
-            os.unlink(legacy)
-        except FileNotFoundError:
-            pass  # no legacy file, or a rival writer's prune got it
-            # first (exists-then-unlink would TOCTOU-raise out of a
-            # commit that already durably succeeded — code-review r6)
 
     def commit(
         self, epoch_id: int, add_files: list[str], meta: dict | None = None

@@ -1,11 +1,21 @@
 """Columnar event store — meepo's RedisEventStore re-expressed as a
-date-partitioned parquet log (ref: meepo/apps/eventsourcing/
-event_store.py, module path per SURVEY.md §0).
+date-partitioned parquet log committed through a manifest (ref:
+meepo/apps/eventsourcing/event_store.py, module path per SURVEY.md §0).
 
-ZSET add             → append to log (batch write / streaming sink)
-ZSET dedup-by-pk     → compaction job: latest image per (table, pk)
-replay(event, range) → partition-pruned time-range scan, ts order
-query(event, pk)     → last-change ts per pk (max aggregate)
+ZSET add             → ``append_epoch``: one idempotent manifest commit
+                       per micro-batch (drive a stream through
+                       ``foreachBatch(store.append_epoch)``)
+ZSET dedup-by-pk     → ``compact_txn``: latest image per (table, pk),
+                       swapped in as the live file set
+replay(event, range) → ``replay``: partition-pruned time-range scan,
+                       ts order
+query(event, pk)     → ``last_change``: last-change ts per pk
+
+There is one store, ``TransactionalEventStore`` (plus its typed-lane
+subclass): readers list files from the manifest, never from the
+directory. Bounded history is ``compact_txn`` + ``vacuum_orphans``;
+date-granular retention is not offered (it returns as file-level
+remove actions in the manifest, ROADMAP #3).
 
 100 TB posture: the log partitions by event_date (replay cost ∝ the
 time range, never the log length); compaction keeps a separate
@@ -25,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from meepo_spark.cdc.commit_log import CommitLog
 from meepo_spark.schemas import CHANGE_EVENT
 
 # log() layout: the canonical ChangeEvent columns + the event_date
@@ -33,170 +44,30 @@ LOG_SCHEMA = T.StructType(
     list(CHANGE_EVENT.fields) + [T.StructField("event_date", T.DateType())]
 )
 
-
-class EventStore:
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path
-
-    # --- write path -------------------------------------------------
-    def append(self, changes: DataFrame) -> None:
-        """Append a batch of ChangeEvents to the partitioned log."""
-        (
-            changes.withColumn("event_date", F.to_date("ts"))
-            .write.mode("append")
-            .partitionBy("event_date")
-            .parquet(self.path)
-        )
-
-    def streaming_sink(self, changes: DataFrame, checkpoint: str):
-        """Continuous append from a change stream — offsets tracked in
-        the checkpoint are the engine's binlog-position resume."""
-        return (
-            changes.withColumn("event_date", F.to_date("ts"))
-            .writeStream.format("parquet")
-            .option("path", self.path)
-            .option("checkpointLocation", checkpoint)
-            .partitionBy("event_date")
-        )
-
-    # --- read path ----------------------------------------------------
-    def log(self) -> DataFrame:
-        reader = self.spark.read
-        if os.path.isdir(os.path.join(self.path, "_spark_metadata")):
-            # A store populated via streaming_sink() resolves its file
-            # list through the sink's _spark_metadata commit log, which
-            # expire() does not rewrite — entries for dropped
-            # event_date partitions would otherwise fail the read with
-            # FileNotFoundException, first at schema inference (footer
-            # reads) and then at scan. The explicit schema skips the
-            # footer reads; ignoreMissingFiles skips the dangling scan
-            # entries. Both are exact here: a file is only ever missing
-            # because retention deleted its whole partition.
-            reader = reader.schema(LOG_SCHEMA).option("ignoreMissingFiles", "true")
-        return reader.parquet(self.path)
-
-    def replay(self, table: str, action: str | None, t0, t1) -> DataFrame:
-        """Events for a topic within [t0, t1), ts order — meepo's
-        `replay`. The event_date partition filter prunes to the range.
-        """
-        df = self.log().filter(
-            (F.col("table") == table)
-            & (F.col("ts") >= F.lit(t0).cast("timestamp"))
-            & (F.col("ts") < F.lit(t1).cast("timestamp"))
-            & (F.col("event_date") >= F.to_date(F.lit(t0)))
-            & (F.col("event_date") <= F.to_date(F.lit(t1)))
-        )
-        if action is not None:
-            df = df.filter(F.col("action") == action)
-        return df.orderBy("ts", "offset")
-
-    def last_change(self, table: str) -> DataFrame:
-        """Last-change timestamp per pk — meepo's `query` (ZSCORE)."""
-        return (
-            self.log()
-            .filter(F.col("table") == table)
-            .groupBy("pk")
-            .agg(F.max("ts").alias("last_ts"), F.max("offset").alias("last_offset"))
-        )
-
-    # --- maintenance ----------------------------------------------------
-    def compact(self, snapshot_path: str) -> DataFrame:
-        """Latest image per (table, pk) — the ZSET's dedup-by-pk as a
-        periodic job. max_by over (ts, offset) pins the winner even
-        for same-ts events; deletes drop out of the snapshot."""
-        latest = (
-            self.log()
-            .groupBy("table", "pk")
-            .agg(
-                F.max_by(
-                    F.struct("action", "row", "ts", "offset"),
-                    F.struct("ts", "offset"),
-                ).alias("last")
-            )
-            .select(
-                "table",
-                "pk",
-                F.col("last.action").alias("action"),
-                F.col("last.row").alias("row"),
-                F.col("last.ts").alias("ts"),
-                F.col("last.offset").alias("offset"),
-            )
-        )
-        snap = latest.filter(F.col("action") != "delete")
-        snap.write.mode("overwrite").parquet(snapshot_path)
-        return self.spark.read.parquet(snapshot_path)
-
-    def rebuild(self, table: str, as_of) -> DataFrame:
-        """Table state as of a point in time: replay the log up to
-        ``as_of``, keep each pk's latest image, drop deletions —
-        meepo's event-sourcing 'rebuild from events' (Entry 3,
-        SURVEY.md §3.2)."""
-        upto = self.log().filter(
-            (F.col("table") == table) & (F.col("ts") <= F.lit(as_of).cast("timestamp"))
-        )
-        latest = (
-            upto.groupBy("pk")
-            .agg(
-                F.max_by(F.struct("action", "row", "ts", "offset"), F.struct("ts", "offset")).alias(
-                    "last"
-                )
-            )
-            .select(
-                "pk",
-                F.col("last.action").alias("action"),
-                F.col("last.row").alias("row"),
-                F.col("last.ts").alias("ts"),
-            )
-        )
-        return latest.filter(F.col("action") != "delete").drop("action")
-
-    def expire(self, before) -> list[str]:
-        """Retention enforcement: drop whole event_date partitions
-        older than ``before`` (a date or 'YYYY-MM-DD' string); returns
-        the dropped partition names.
-
-        Deletion is DIRECTORY-level, never row-level: at 100 TB a
-        row-filtering rewrite of the log would cost a full read+write
-        cycle, while dropping a date partition is a metadata/DEL
-        operation whose cost is independent of data volume — the same
-        reason replay prunes on event_date. Rows inside a partition
-        are all strictly older than any later partition by
-        construction (event_date = to_date(ts)), so the cut is exact
-        at day granularity.
-
-        Accepts a date, a datetime (truncated to its date), or a
-        'YYYY-MM-DD' string. Partition directories whose value is not
-        an ISO date (e.g. __HIVE_DEFAULT_PARTITION__ from null-ts
-        events) are never aged out — they carry no ordering
-        information, so retention cannot prove them expired."""
-        import datetime
-        import shutil
-
-        if isinstance(before, str):
-            cutoff = datetime.date.fromisoformat(before)
-        elif isinstance(before, datetime.datetime):
-            # datetime subclasses date: truncate instead of letting a
-            # date < datetime comparison raise mid-deletion
-            cutoff = before.date()
-        else:
-            cutoff = before
-        dropped: list[str] = []
-        for name in sorted(os.listdir(self.path)):
-            if not name.startswith("event_date="):
-                continue
-            try:
-                day = datetime.date.fromisoformat(name.split("=", 1)[1])
-            except ValueError:
-                continue
-            if day < cutoff:
-                shutil.rmtree(os.path.join(self.path, name))
-                dropped.append(name)
-        return dropped
+_KEYS = ("schema_name", "table", "pk")
 
 
-class TransactionalEventStore(EventStore):
-    """EventStore whose write path is governed by the Delta-lite
+def _latest_image(frame: DataFrame, cols: list[str]) -> DataFrame:
+    """Latest non-delete image per (schema_name, table, pk) — the
+    ZSET's dedup-by-pk, shared by every compaction. max_by over
+    (ts, offset) pins the winner even for same-ts events; deletes drop
+    out. ``cols`` is the output column order: the keys, the payload
+    carried in the winner's struct (every other column but
+    ``event_date``), and ``event_date``, re-derived from the winner's
+    ts."""
+    payload = [c for c in cols if c not in _KEYS and c != "event_date"]
+    return (
+        frame.groupBy(*_KEYS)
+        .agg(F.max_by(F.struct(*payload), F.struct("ts", "offset")).alias("last"))
+        .select(*_KEYS, *[F.col(f"last.{c}").alias(c) for c in payload])
+        .filter(F.col("action") != "delete")
+        .withColumn("event_date", F.to_date("ts"))
+        .select(*cols)
+    )
+
+
+class TransactionalEventStore:
+    """The event store, its write path governed by the Delta-lite
     ``CommitLog`` (VERDICT r4 #7): data files become visible only via
     an atomic single-file manifest commit, never by directory listing.
 
@@ -223,9 +94,8 @@ class TransactionalEventStore(EventStore):
     """
 
     def __init__(self, spark: SparkSession, path: str):
-        super().__init__(spark, path)
-        from meepo_spark.cdc.commit_log import CommitLog
-
+        self.spark = spark
+        self.path = path
         self.commits = CommitLog(path)
         # per read lane: (member keys, {key: scan frame}, union frame)
         self._unions: dict[str, tuple[tuple, dict, DataFrame]] = {}
@@ -261,33 +131,6 @@ class TransactionalEventStore(EventStore):
             self.path,
             "snapshots",
             f"v{self.commits.version() + 1}-{uuid.uuid4().hex[:8]}",
-        )
-
-    # --- inherited raw-directory paths are OFF here --------------------
-    # The base class's append/streaming_sink write event_date= dirs
-    # straight under the root (invisible to the manifest — silent data
-    # loss on read), and expire() lists the root for event_date= dirs it
-    # will never find in the data/epoch=<id> layout (silent retention
-    # no-op). Fail loudly instead of bypassing the commit protocol.
-    def append(self, changes: DataFrame) -> None:
-        raise NotImplementedError(
-            "TransactionalEventStore: use append_epoch(df, epoch_id) — "
-            "raw append() would bypass the commit manifest and its rows "
-            "would never be visible to log()"
-        )
-
-    def streaming_sink(self, changes: DataFrame, checkpoint: str):
-        raise NotImplementedError(
-            "TransactionalEventStore: drive the stream through "
-            "foreachBatch -> append_epoch(batch, epoch_id); the raw "
-            "parquet sink bypasses the commit manifest"
-        )
-
-    def expire(self, before) -> list[str]:
-        raise NotImplementedError(
-            "TransactionalEventStore: directory-listing retention does "
-            "not apply to the manifest layout; compact_txn() then drop "
-            "pre-snapshot epochs via the manifest instead"
         )
 
     # --- write path ---------------------------------------------------
@@ -400,6 +243,54 @@ class TransactionalEventStore(EventStore):
         self._unions[lane] = (keys, scans, union)
         return union
 
+    def replay(self, table: str, action: str | None, t0, t1) -> DataFrame:
+        """Events for a topic within [t0, t1), ts order — meepo's
+        `replay`. The event_date partition filter prunes to the range.
+        """
+        df = self.log().filter(
+            (F.col("table") == table)
+            & (F.col("ts") >= F.lit(t0).cast("timestamp"))
+            & (F.col("ts") < F.lit(t1).cast("timestamp"))
+            & (F.col("event_date") >= F.to_date(F.lit(t0)))
+            & (F.col("event_date") <= F.to_date(F.lit(t1)))
+        )
+        if action is not None:
+            df = df.filter(F.col("action") == action)
+        return df.orderBy("ts", "offset")
+
+    def last_change(self, table: str) -> DataFrame:
+        """Last-change timestamp per pk — meepo's `query` (ZSCORE)."""
+        return (
+            self.log()
+            .filter(F.col("table") == table)
+            .groupBy("pk")
+            .agg(F.max("ts").alias("last_ts"), F.max("offset").alias("last_offset"))
+        )
+
+    def rebuild(self, table: str, as_of) -> DataFrame:
+        """Table state as of a point in time: replay the log up to
+        ``as_of``, keep each pk's latest image, drop deletions —
+        meepo's event-sourcing 'rebuild from events' (Entry 3,
+        SURVEY.md §3.2)."""
+        upto = self.log().filter(
+            (F.col("table") == table) & (F.col("ts") <= F.lit(as_of).cast("timestamp"))
+        )
+        latest = (
+            upto.groupBy("pk")
+            .agg(
+                F.max_by(F.struct("action", "row", "ts", "offset"), F.struct("ts", "offset")).alias(
+                    "last"
+                )
+            )
+            .select(
+                "pk",
+                F.col("last.action").alias("action"),
+                F.col("last.row").alias("row"),
+                F.col("last.ts").alias("ts"),
+            )
+        )
+        return latest.filter(F.col("action") != "delete").drop("action")
+
     # --- maintenance --------------------------------------------------
     def compact_txn(self) -> DataFrame:
         """Compaction with an atomic manifest swap: write the latest
@@ -407,30 +298,7 @@ class TransactionalEventStore(EventStore):
         live file set in one manifest version. Late redeliveries of
         pre-compaction epochs stay no-ops (epoch ids are retained)."""
         snap_dir = self._snapshot_dir()
-        latest = (
-            self.log()
-            .groupBy("schema_name", "table", "pk")
-            .agg(
-                F.max_by(
-                    F.struct("action", "row", "old_row", "ts", "offset", "txn_id"),
-                    F.struct("ts", "offset"),
-                ).alias("last")
-            )
-            .select(
-                F.col("last.action").alias("action"),
-                F.col("last.row").alias("row"),
-                F.col("last.old_row").alias("old_row"),
-                F.col("last.ts").alias("ts"),
-                F.col("last.offset").alias("offset"),
-                F.col("last.txn_id").alias("txn_id"),
-                "schema_name",
-                "table",
-                "pk",
-            )
-            .filter(F.col("action") != "delete")
-            .withColumn("event_date", F.to_date("ts"))
-            .select(*[f.name for f in LOG_SCHEMA.fields])
-        )
+        latest = _latest_image(self.log(), LOG_SCHEMA.fieldNames())
         latest.write.mode("overwrite").partitionBy("event_date").parquet(snap_dir)
         self.commits.compact([snap_dir], {"snapshot": snap_dir})
         return self.log()
@@ -477,12 +345,7 @@ class TransactionalEventStore(EventStore):
             )
         dropped: list[str] = []
         for d in candidates:
-            dn = os.path.normpath(d)
-            # self OR parent live: pre-round-7 (legacy layout) manifests
-            # record data/epoch=<id> itself, whose CHILDREN here are its
-            # committed event_date= partition dirs — deleting them would
-            # silently empty a committed epoch (code-review r7 #1)
-            if dn in live or os.path.dirname(dn) in live or not os.path.isdir(d):
+            if os.path.normpath(d) in live or not os.path.isdir(d):
                 continue
             newest = max(
                 (
@@ -499,12 +362,7 @@ class TransactionalEventStore(EventStore):
         if os.path.isdir(data_root):  # clear now-empty epoch= parents
             for e in sorted(os.listdir(data_root)):
                 ed = os.path.join(data_root, e)
-                if (
-                    e.startswith("epoch=")
-                    and os.path.normpath(ed) not in live  # legacy layout
-                    and os.path.isdir(ed)
-                    and not os.listdir(ed)
-                ):
+                if e.startswith("epoch=") and os.path.isdir(ed) and not os.listdir(ed):
                     try:
                         os.rmdir(ed)
                     except OSError:
@@ -512,6 +370,7 @@ class TransactionalEventStore(EventStore):
                         # between the emptiness check and the rmdir
                         # (code-review r7 #2) — leave it for next time
         return dropped
+
 
 class TypedTransactionalEventStore(TransactionalEventStore):
     """TransactionalEventStore whose epochs PERSIST the typed payload
@@ -632,37 +491,13 @@ class TypedTransactionalEventStore(TransactionalEventStore):
         return self._union_of("typed", tuple(fv), scan, allowMissingColumns=True)
 
     def _latest_typed(self) -> tuple[DataFrame, int]:
-        """Latest non-delete image per (table, pk) KEEPING row_t —
+        """The latest-image merge over the typed log, KEEPING row_t —
         written as the max-version superset struct the merged typed
         log already carries. Shared by both compaction layouts."""
         fv = self._file_versions()
         snap_version = max((v for _, v in fv), default=max(self.registry))
-        cols = [f.name for f in self.typed_schema(snap_version).fields]
-        payload = [c for c in cols if c != "event_date"]
-        latest = (
-            self.typed_log()
-            .groupBy("schema_name", "table", "pk")
-            .agg(
-                F.max_by(
-                    F.struct(*[c for c in payload if c not in ("schema_name", "table", "pk")]),
-                    F.struct("ts", "offset"),
-                ).alias("last")
-            )
-            .select(
-                "schema_name",
-                "table",
-                "pk",
-                *[
-                    F.col(f"last.{c}").alias(c)
-                    for c in payload
-                    if c not in ("schema_name", "table", "pk")
-                ],
-            )
-            .filter(F.col("action") != "delete")
-            .withColumn("event_date", F.to_date("ts"))
-            .select(*cols)
-        )
-        return latest, snap_version
+        cols = self.typed_schema(snap_version).fieldNames()
+        return _latest_image(self.typed_log(), cols), snap_version
 
     def compact_txn(self) -> DataFrame:
         """Typed compaction: latest non-delete image per (table, pk)

@@ -712,8 +712,7 @@ def a21_log_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Same single max_by shuffle as a7 — the retention rule is a
     post-aggregation filter, so tombstone retention costs nothing
-    extra at 100 TB (the expiry itself rides the event_date partition
-    drop, EventStore.expire)."""
+    extra at 100 TB."""
     ch = events_as_changes(spark, sf_dir)
     latest = ch.groupBy("pk").agg(
         F.max_by(F.struct("action", "row", "ts"), F.struct("ts", "offset")).alias("last")

@@ -1,13 +1,14 @@
 """Parity-layer round-trips (SURVEY.md §5.2.4): event store
-add→replay→rebuild, streaming append, exactly-once redelivery,
-fan-out routing, partition pruning."""
+add→replay→rebuild→compact, exactly-once redelivery, fan-out routing,
+partition pruning. Streaming into the store is covered in
+tests/test_commit_log.py."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 import pytest
 
-from meepo_spark.cdc.event_store import EventStore
+from meepo_spark.cdc.event_store import TransactionalEventStore
 from meepo_spark.cdc.events import events_as_changes, filter_tables, read_change_stream, topic
 from meepo_spark.cdc.exactly_once import EpochLedger, idempotent_foreach_batch, in_doubt
 from meepo_spark.cdc.fanout import Fanout
@@ -22,12 +23,12 @@ def changes(spark, sf_dir):
 
 @pytest.fixture()
 def store(spark, tmp_path, changes):
-    s = EventStore(spark, str(tmp_path / "log"))
-    s.append(changes)
+    s = TransactionalEventStore(spark, str(tmp_path / "log"))
+    assert s.append_epoch(changes, 0) is True
     return s
 
 
-def test_store_replay_matches_source(spark, store, changes):
+def test_store_replay_matches_source(spark, store, changes, tmp_path):
     t0, t1 = "2024-01-05 00:00:00", "2024-01-12 00:00:00"
     got = store.replay("users", "update", t0, t1).select("pk", "ts", "offset").collect()
     want = (
@@ -45,6 +46,11 @@ def test_store_replay_matches_source(spark, store, changes):
         [r["offset"] for r in got],
         key=lambda o: ([w["offset"] for w in want].index(o)),
     )
+    # a store with no commits reads as empty, not as an error
+    empty = TransactionalEventStore(spark, str(tmp_path / "empty"))
+    assert empty.replay("users", None, t0, t1).count() == 0
+    assert empty.last_change("users").count() == 0
+    assert empty.rebuild("users", t1).count() == 0
 
 
 def test_replay_prunes_partitions(store):
@@ -55,8 +61,8 @@ def test_replay_prunes_partitions(store):
 
 def test_rebuild_equals_direct_snapshot(spark, store, changes):
     """Entry-3: replaying the log reproduces state computed straight
-    from the source — and applying the stream twice changes nothing
-    (event-store add is idempotent on (pk, ts, offset) identity)."""
+    from the source — and redelivering the epoch changes nothing
+    (append_epoch is a manifest no-op for a committed epoch id)."""
     asof = "2024-01-20 00:00:00"
     direct = (
         changes.filter(F.col("ts") <= F.lit(asof).cast("timestamp"))
@@ -67,22 +73,13 @@ def test_rebuild_equals_direct_snapshot(spark, store, changes):
     )
     rebuilt = store.rebuild("users", asof).select("pk", F.col("row")["value"].alias("v"))
     assert sorted(map(tuple, rebuilt.collect())) == sorted(map(tuple, direct.collect()))
-    # idempotence: append the same events again, dedup by identity, same state
-    store.append(changes)
-    rebuilt2 = (
-        store.log()
-        .filter(F.col("ts") <= F.lit(asof).cast("timestamp"))
-        .dropDuplicates(["pk", "ts", "offset"])
-        .groupBy("pk")
-        .agg(F.max_by(F.struct("action", "row"), F.struct("ts", "offset")).alias("l"))
-        .filter(F.col("l.action") != "delete")
-        .select("pk", F.col("l.row")["value"].alias("v"))
-    )
+    assert store.append_epoch(changes, 0) is False
+    rebuilt2 = store.rebuild("users", asof).select("pk", F.col("row")["value"].alias("v"))
     assert sorted(map(tuple, rebuilt2.collect())) == sorted(map(tuple, direct.collect()))
 
 
-def test_compact_snapshot(spark, store, changes, tmp_path):
-    snap = store.compact(str(tmp_path / "snap"))
+def test_compact_snapshot(spark, store, changes):
+    snap = store.compact_txn()
     latest = (
         changes.groupBy("pk")
         .agg(F.max_by("action", F.struct("ts", "offset")).alias("action"))
@@ -90,25 +87,6 @@ def test_compact_snapshot(spark, store, changes, tmp_path):
     )
     assert snap.count() == latest.count()
     assert snap.filter(F.col("action") == "delete").count() == 0
-
-
-def test_streaming_append_resumes(spark, changes, tmp_path):
-    """Stream the change log in via availableNow; the checkpoint is
-    the binlog-position resume: a second start() with no new data
-    appends nothing."""
-    src = str(tmp_path / "src")
-    changes.write.mode("overwrite").parquet(src)
-    stream = read_change_stream(spark, src)
-    store = EventStore(spark, str(tmp_path / "slog"))
-    q = store.streaming_sink(stream, str(tmp_path / "ckpt")).trigger(availableNow=True).start()
-    q.awaitTermination(120)
-    n1 = store.log().count()
-    assert n1 == changes.count()
-    q2 = store.streaming_sink(read_change_stream(spark, src), str(tmp_path / "ckpt")).trigger(
-        availableNow=True
-    ).start()
-    q2.awaitTermination(120)
-    assert store.log().count() == n1, "checkpoint resume must not re-ingest"
 
 
 def test_exactly_once_redelivery(spark, changes, tmp_path):
@@ -302,91 +280,6 @@ def test_asof_join_matches_pandas_merge_asof(spark):
     pd.testing.assert_frame_equal(got, exp, check_dtype=False)
 
 
-def test_event_store_expire_drops_partitions_only(spark, tmp_path):
-    """Retention: expire(cutoff) removes exactly the partitions older
-    than the cutoff — a directory-level drop whose cost is
-    independent of data volume — and the surviving log is
-    byte-identical for every retained day (no rewrite happened)."""
-    from meepo_spark.cdc.event_store import EventStore
-    from meepo_spark.cdc.events import events_as_changes
-
-    store = EventStore(spark, str(tmp_path / "store"))
-    changes = events_as_changes(spark, SF_DIR)
-    store.append(changes)
-
-    days = sorted(
-        r["event_date"]
-        for r in store.log().select("event_date").distinct().collect()
-    )
-    assert len(days) > 5
-    cutoff = days[3]
-    before_counts = {
-        r["event_date"]: r["n"]
-        for r in store.log().groupBy("event_date").agg(F.count("*").alias("n")).collect()
-    }
-    dropped = store.expire(cutoff)
-    assert len(dropped) == 3
-    left = sorted(
-        r["event_date"]
-        for r in store.log().select("event_date").distinct().collect()
-    )
-    assert left == days[3:]
-    after_counts = {
-        r["event_date"]: r["n"]
-        for r in store.log().groupBy("event_date").agg(F.count("*").alias("n")).collect()
-    }
-    assert after_counts == {d: n for d, n in before_counts.items() if d >= cutoff}
-
-
-def test_event_store_expire_on_streaming_written_store(spark, tmp_path):
-    """ADVICE round 1 (medium): a store populated via streaming_sink()
-    resolves files through the sink's _spark_metadata commit log, which
-    expire() does not rewrite — log()/replay()/compact() after expire()
-    must survive the dangling entries (ignoreMissingFiles) instead of
-    failing with FileNotFoundException. Also covers the edge inputs:
-    a datetime cutoff (subclass of date) and a non-date partition dir
-    name, neither of which may abort mid-deletion."""
-    import datetime
-
-    from meepo_spark.cdc.event_store import EventStore
-    from meepo_spark.cdc.events import events_as_changes, read_change_stream
-
-    src = str(tmp_path / "src")
-    events_as_changes(spark, SF_DIR).write.mode("overwrite").parquet(src)
-    store = EventStore(spark, str(tmp_path / "slog"))
-    q = (
-        store.streaming_sink(read_change_stream(spark, src), str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    assert (tmp_path / "slog" / "_spark_metadata").is_dir(), "precondition"
-
-    days = sorted(
-        r["event_date"] for r in store.log().select("event_date").distinct().collect()
-    )
-    assert len(days) > 4
-    # a decoy non-date partition dir must be skipped, not raise
-    decoy = tmp_path / "slog" / "event_date=__HIVE_DEFAULT_PARTITION__"
-    decoy.mkdir()
-    # datetime cutoff (datetime subclasses date — must truncate, not raise)
-    cutoff_dt = datetime.datetime.combine(days[2], datetime.time(13, 30))
-    dropped = store.expire(cutoff_dt)
-    assert len(dropped) == 2 and all(d.startswith("event_date=") for d in dropped)
-    assert decoy.is_dir(), "non-date partition must never be aged out"
-
-    # every read path still works over the sink-log-backed store
-    left = sorted(
-        r["event_date"] for r in store.log().select("event_date").distinct().collect()
-    )
-    assert left == days[2:]
-    t0 = datetime.datetime.combine(days[2], datetime.time(0, 0))
-    t1 = datetime.datetime.combine(days[-1], datetime.time(23, 59))
-    assert store.replay("users", None, t0, t1).count() > 0
-    snap = store.compact(str(tmp_path / "snap"))
-    assert snap.count() > 0
-
-
 def test_kafka_seam_payload_contract(spark):
     """A6/A11 (VERDICT round 1, next-round #8): the kafka publisher
     seam. kafka_records must produce exactly the sink schema Spark's
@@ -498,7 +391,6 @@ def test_multi_sink_exactly_once_fanout_converges(spark, tmp_path):
     re-applies the DLQ parquet through the NORMAL append_epoch path and
     both sinks converge to identical contents; (4) post-recovery
     redeliveries are manifest no-ops on both sinks."""
-    from meepo_spark.cdc.event_store import TransactionalEventStore
     from meepo_spark.cdc.fanout import with_dlq
     from meepo_spark.schemas import CHANGE_EVENT
 

@@ -228,23 +228,6 @@ def test_committed_empty_epoch_does_not_poison_reads(spark, tmp_path):
     assert compacted.count() > 0
 
 
-def test_transactional_store_blocks_raw_directory_paths(spark, tmp_path):
-    """Code-review r5 #4: the base class's append/streaming_sink/expire
-    read or write the raw directory layout, silently bypassing the
-    manifest (append's rows would never be visible; expire would no-op).
-    They must fail loudly on the transactional store."""
-    import pytest
-
-    ch = events_as_changes(spark, SF_DIR).limit(10)
-    store = TransactionalEventStore(spark, str(tmp_path / "txraw"))
-    with pytest.raises(NotImplementedError):
-        store.append(ch)
-    with pytest.raises(NotImplementedError):
-        store.streaming_sink(ch, str(tmp_path / "ckpt"))
-    with pytest.raises(NotImplementedError):
-        store.expire("2024-01-01")
-
-
 def test_manifest_swap_fsyncs_directory(tmp_path, monkeypatch):
     """Code-review r5 #3: commit durability = tmp fsync + atomic rename
     + DIRECTORY fsync (the rename lives in the dir entry). Assert the
@@ -326,40 +309,6 @@ def test_streaming_into_transactional_store_end_to_end(spark, tmp_path):
     )
     want = sorted((r["pk"], r["offset"]) for r in ch.select("pk", "offset").collect())
     assert got == want
-
-
-def test_read_retries_legacy_to_versioned_migration_race(tmp_path, monkeypatch):
-    """Code-review r6b: reader lists no versioned manifests (pre-
-    migration snapshot), a rival lands the FIRST versioned commit and
-    its prune unlinks the legacy file before the reader opens it —
-    _read must re-list and serve the committed state, never report a
-    committed table as empty."""
-    import json as _json
-
-    from meepo_spark.cdc import commit_log as cl
-
-    root = tmp_path / "s"
-    root.mkdir()
-    # the rival has ALREADY migrated: versioned manifest exists, legacy
-    # is gone. We simulate the reader's stale first listing by making
-    # _versions return [] exactly once.
-    (root / "_commits-00000001.json").write_text(
-        _json.dumps(
-            {"version": 1, "epochs": {"0": {"files": ["a"]}}, "files": ["a"],
-             "writer": "rival"}
-        )
-    )
-    log = CommitLog(str(root), writer_id="reader")
-    real_versions = CommitLog._versions
-    calls = {"n": 0}
-
-    def stale_once(self):
-        calls["n"] += 1
-        return [] if calls["n"] == 1 else real_versions(self)
-
-    monkeypatch.setattr(CommitLog, "_versions", stale_once)
-    assert log.files() == ["a"], "migration race must re-list, not read empty"
-    assert log.committed(0)
 
 
 def test_concurrent_same_epoch_data_writes_cannot_corrupt_winner(spark, tmp_path):
@@ -499,34 +448,6 @@ def test_vacuum_grace_protects_inflight_attempts(spark, tmp_path):
     dropped = store.vacuum_orphans(grace_seconds=0.0)
     assert [os.path.normpath(d) for d in dropped] == [os.path.normpath(orphan)]
     assert store.log().count() == ch.count()
-
-
-def test_vacuum_never_touches_legacy_layout_committed_data(spark, tmp_path):
-    """Code-review r7 #1: pre-round-7 manifests record data/epoch=<id>
-    ITSELF as the committed path (attempt dirs did not exist), so that
-    dir's children are committed event_date= partitions — vacuum's
-    candidate walk (children of every epoch= dir) must treat a
-    candidate as live when its PARENT is in the manifest file set."""
-    ch = events_as_changes(spark, SF_DIR).limit(80)
-    path = str(tmp_path / "legacy")
-    store = TransactionalEventStore(spark, path)
-    # write the legacy layout by hand: parquet directly in the epoch
-    # dir, manifest pointing at the epoch dir itself
-    legacy_dir = os.path.join(path, "data", "epoch=3")
-    (
-        ch.withColumn("event_date", F.to_date("ts"))
-        .write.mode("overwrite")
-        .partitionBy("event_date")
-        .parquet(legacy_dir)
-    )
-    assert store.commits.commit(3, [legacy_dir]) is True
-    n = store.log().count()
-    assert n == ch.count()
-
-    assert store.vacuum_orphans(grace_seconds=0.0) == []
-    assert store.log().count() == n, "vacuum gutted a legacy committed epoch"
-    # and the empty-parent sweep must not rmdir a LIVE legacy epoch dir
-    assert os.path.isdir(legacy_dir)
 
 
 def test_vacuum_racing_inflight_writer_inside_grace_then_commit(spark, tmp_path):

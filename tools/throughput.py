@@ -5,9 +5,11 @@ Protocol (end-to-end, cold streaming start, matching meepo's
 binlog→store→consumer delivery path):
   1. adapt the `events` fixture to ChangeEvent rows (cdc/events.py),
      land them as a source directory of parquet files;
-  2. run the streaming ingest: readStream → partitioned event store
-     (availableNow trigger — processes the whole backlog then stops);
-  3. compact the store to the latest-per-pk snapshot;
+  2. run the streaming ingest: readStream → foreachBatch into the
+     TransactionalEventStore's ``append_epoch`` (one manifest commit per
+     micro-batch; availableNow trigger — processes the whole backlog
+     then stops);
+  3. compact the store to the latest-per-pk snapshot (``compact_txn``);
   4. report events/sec over the full wall time (startup included — a
      deliberately conservative number; at production batch cadence the
      fixed ~2 s micro-batch startup amortizes away).
@@ -68,19 +70,22 @@ def _replicate(changes, n: int):
     return out
 
 
-def _run_pipeline(spark, src, store_path, snap, ck):
-    import time as _t
-
-    from meepo_spark.cdc.event_store import EventStore
+def _run_pipeline(spark, src, store_path, ck):
+    from meepo_spark.cdc.event_store import TransactionalEventStore
     from meepo_spark.cdc.events import read_change_stream
 
-    t0 = _t.perf_counter()
-    stream = read_change_stream(spark, src)
-    store = EventStore(spark, store_path)
-    q = store.streaming_sink(stream, ck).trigger(availableNow=True).start()
+    t0 = time.perf_counter()
+    store = TransactionalEventStore(spark, store_path)
+    q = (
+        read_change_stream(spark, src)
+        .writeStream.foreachBatch(store.append_epoch)
+        .option("checkpointLocation", ck)
+        .trigger(availableNow=True)
+        .start()
+    )
     q.awaitTermination()
-    store.compact(snap)
-    return _t.perf_counter() - t0
+    store.compact_txn()
+    return time.perf_counter() - t0
 
 
 def main() -> None:
@@ -93,14 +98,13 @@ def main() -> None:
     work = tempfile.mkdtemp(prefix="throughput_")
     src = os.path.join(work, "source")
     store_path = os.path.join(work, "store")
-    snap = os.path.join(work, "snapshot")
     ck = os.path.join(work, "ck")
     try:
         changes = events_as_changes(spark, sf_dir)
         changes.write.mode("overwrite").parquet(src)
         n_events = spark.read.parquet(src).count()
 
-        wall = _run_pipeline(spark, src, store_path, snap, ck)
+        wall = _run_pipeline(spark, src, store_path, ck)
         print(
             json.dumps(
                 {
@@ -118,9 +122,9 @@ def main() -> None:
             src2 = os.path.join(work, "source_scaled")
             _replicate(changes, scale).write.mode("overwrite").parquet(src2)
             n2 = spark.read.parquet(src2).count()
-            for d in (store_path, snap, ck):
+            for d in (store_path, ck):
                 shutil.rmtree(d, ignore_errors=True)
-            wall2 = _run_pipeline(spark, src2, store_path, snap, ck)
+            wall2 = _run_pipeline(spark, src2, store_path, ck)
             print(
                 json.dumps(
                     {
