@@ -29,9 +29,10 @@ The contract (the useful subset of a table-format txn log):
 * **Idempotent epochs.** ``commit`` with an already-committed epoch
   is a no-op — exactly the redelivery discipline
   ``idempotent_foreach_batch`` needs.
-* **Compaction manifest.** ``compact`` atomically REPLACES the live
-  file set with a snapshot's files while retaining the committed-epoch
-  set (so replayed epochs stay no-ops after compaction).
+* **Compaction manifest.** ``compact`` atomically REPLACES the files
+  a compaction read with its snapshot's files, keeps files committed
+  meanwhile, and retains the committed-epoch set (so replayed epochs
+  stay no-ops after compaction).
 
 Each version file holds the FULL state (Iceberg-metadata style), so a
 reader touches exactly one file: list the directory, load the highest
@@ -215,15 +216,24 @@ class CommitLog:
             "contention; shard the store or reduce writer count"
         )
 
-    def compact(self, snapshot_files: list[str], meta: dict | None = None) -> int:
-        """Atomically replace the live file set with ``snapshot_files``
-        (already written and durable). Committed-epoch ids are KEPT so
-        late redeliveries of pre-compaction epochs remain no-ops.
-        Returns the new version. Raises :class:`ConcurrentCommitError`
-        on a lost version race, like ``commit``."""
+    def compact(self, snapshot_files: list[str], meta: dict | None = None, replaces=None) -> int:
+        """Atomically replace ``replaces`` (the files the compaction
+        read; default the whole live set) with ``snapshot_files``,
+        already written and durable: the snapshot goes first, files
+        committed since stay after it, and committed-epoch ids are KEPT
+        so pre-compaction redeliveries stay no-ops. Returns the new
+        version. Raises :class:`ConcurrentCommitError` if a replaced
+        file is no longer live (a rival compaction won) or on a lost
+        version race."""
         state = self._read()
+        replaces = state["files"] if replaces is None else replaces
+        gone = [f for f in replaces if f not in state["files"]]
+        if gone:
+            raise ConcurrentCommitError(
+                f"compaction read {gone!r}; a rival compaction replaced them first"
+            )
         state["version"] += 1
-        state["files"] = list(snapshot_files)
+        state["files"] = list(snapshot_files) + [f for f in state["files"] if f not in replaces]
         state["compaction"] = {"version": state["version"], **(meta or {})}
         self._swap(state)
         return state["version"]

@@ -45,6 +45,7 @@ LOG_SCHEMA = T.StructType(
 )
 
 _KEYS = ("schema_name", "table", "pk")
+_FLAT = "z"  # member-name prefix of a clustered snapshot: no event_date level
 
 
 def _latest_image(frame: DataFrame, cols: list[str]) -> DataFrame:
@@ -71,13 +72,18 @@ class TransactionalEventStore:
     ``CommitLog`` (VERDICT r4 #7): data files become visible only via
     an atomic single-file manifest commit, never by directory listing.
 
-    Layout under ``path``::
+    Layout under ``path``: every member is a writer-unique dir under
+    one table root, so one read is one scan::
 
-        _commits-<version>.json        the manifest (put-if-absent CAS)
-        data/epoch=<id>/<writer>-<u8>/ one parquet dir per WRITE ATTEMPT
-                                       (the manifest records the winner;
-                                       losers are vacuumable orphans)
-        snapshots/v<version>-<u8>/     compaction outputs (same rule)
+        _commits-<version>.json             the manifest (put-if-absent CAS)
+        data/member=e<epoch>-<writer>-<u8>/ one dir per epoch WRITE ATTEMPT
+          event_date=<D>/*.parquet          (the manifest records the
+                                            winner; losers are orphans)
+        data/member=s<version>-<u8>/        compaction snapshots (same rule)
+        data/member=z<version>-<u8>/        clustered snapshots: flat files,
+                                            no event_date level
+
+    The letter prefix keeps every ``member`` value a plain string.
 
     Crash matrix (tests/test_commit_log.py):
       * die after data write, before commit  → rows invisible; epoch
@@ -90,19 +96,22 @@ class TransactionalEventStore:
         authoritative (torn ``.tmp`` ignored);
       * die between snapshot write and swap  → old file set still
         served; re-running compaction converges;
-      * redeliver a committed epoch          → manifest no-op.
+      * redeliver a committed epoch          → manifest no-op;
+      * commit lands during a compaction     → it stays live after the
+        snapshot; a second racing compaction raises.
     """
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
         self.commits = CommitLog(path)
-        # per read lane: (member keys, {key: scan frame}, union frame)
-        self._unions: dict[str, tuple[tuple, dict, DataFrame]] = {}
+        self._data = os.path.join(path, "data")
+        # per read lane: (live members, frame)
+        self._frames: dict[str, tuple[tuple, DataFrame]] = {}
 
     def _epoch_dir(self, epoch_id: int) -> str:
         """A fresh WRITER-UNIQUE attempt dir for this epoch:
-        ``data/epoch=<id>/<writer>-<uuid8>`` (ADVICE r6 #1). The CAS
+        ``data/member=e<id>-<writer>-<uuid8>`` (ADVICE r6 #1). The CAS
         fencing protects only the manifest — two live writers
         redelivering the same epoch both pass the ``committed()``
         pre-check and both write data, and with a SHARED target the
@@ -115,23 +124,19 @@ class TransactionalEventStore:
         loser's dir is an orphan — invisible to ``log()`` — reclaimed
         by :meth:`vacuum_orphans`."""
         token = re.sub(r"[^A-Za-z0-9_.-]", "_", self.commits.writer_id)
-        return os.path.join(
-            self.path,
-            "data",
-            f"epoch={epoch_id}",
-            f"{token}-{uuid.uuid4().hex[:8]}",
-        )
+        return self._member_dir(f"e{epoch_id}-{token}")
 
-    def _snapshot_dir(self) -> str:
+    def _snapshot_dir(self, kind: str = "s") -> str:
         """Snapshot dirs get the same per-attempt uniqueness as epoch
         dirs — two concurrent compactions racing toward the same next
         version must not write the same directory (the loser's
-        overwrite would gut the winner's committed snapshot)."""
-        return os.path.join(
-            self.path,
-            "snapshots",
-            f"v{self.commits.version() + 1}-{uuid.uuid4().hex[:8]}",
-        )
+        overwrite would gut the winner's committed snapshot). ``kind``
+        is the member-name prefix: ``s``, or ``_FLAT`` for a clustered
+        snapshot."""
+        return self._member_dir(f"{kind}{self.commits.version() + 1}")
+
+    def _member_dir(self, name: str) -> str:
+        return os.path.join(self._data, f"member={name}-{uuid.uuid4().hex[:8]}")
 
     # --- write path ---------------------------------------------------
     def append_epoch(self, changes: DataFrame, epoch_id: int) -> bool:
@@ -187,61 +192,55 @@ class TransactionalEventStore:
     # --- read path ----------------------------------------------------
     def log(self) -> DataFrame:
         """Committed rows only — the file list comes from the manifest,
-        so orphan dirs from a crashed writer are invisible. Each
-        committed dir is its own scan (multi-root partition discovery
-        would conflict) unioned by name: predicate/partition pruning
-        applies per scan, and compaction keeps the union width at
-        1 + epochs-since-compaction, so the plan never grows without
-        bound.
+        so orphan dirs from a crashed writer are invisible. Every
+        committed member is one path of ONE parquet scan under the
+        ``data/`` root (``basePath``): pruning applies once, the scan's
+        tasks pack files across members, and the discovered ``member``
+        column is projected away. Only a flat clustered snapshot needs
+        a scan of its own (see ``_scan``).
 
         The manifest is read on every call, but the frame is cached on
         ``tuple(commits.files())``: while the live file set is
-        unchanged the same union is returned, and a new commit builds
-        a scan only for its new dir (see ``_union_of``). This relies
-        on two invariants of the commit protocol: a committed attempt
-        or snapshot dir is never rewritten (every write goes to a
-        fresh writer-unique dir), and ``vacuum_orphans`` removes only
-        dirs no live manifest names."""
-        dirs = self.commits.files()
+        unchanged the same frame is returned. This relies on two
+        invariants of the commit protocol: a committed attempt or
+        snapshot dir is never rewritten (every write goes to a fresh
+        writer-unique dir), and ``vacuum_orphans`` removes only dirs no
+        live manifest names."""
+        return self._log(self.commits.files())
+
+    def _log(self, dirs: list[str]) -> DataFrame:
         if not dirs:
             return self.spark.createDataFrame([], LOG_SCHEMA)
-        # Explicit schema, never inference: a committed EMPTY epoch is a
-        # legal manifest entry whose dir holds only _SUCCESS (partitionBy
-        # on zero rows emits no part files) — schema inference would
-        # raise "Unable to infer schema" there and poison every read of
-        # the store. With the schema pinned, an empty dir is just an
-        # empty scan.
-        return self._union_of(
-            "log",
-            tuple(dirs),
-            lambda d: self.spark.read.schema(LOG_SCHEMA)
-            .parquet(d)
-            .select(*[f.name for f in LOG_SCHEMA.fields]),
-        )
+        return self._scan("log", tuple((d, None) for d in dirs), lambda _: LOG_SCHEMA)
 
-    def _union_of(self, lane: str, keys: tuple, scan, **union_kw) -> DataFrame:
-        """The by-name union of one scan per committed dir, built once
-        per live file set. ``keys`` holds one hashable key per live dir
-        in manifest order; ``scan(key)`` builds that dir's frame. The
-        union is returned as is while ``keys`` is unchanged; otherwise
-        member scans are kept for keys still live, built for new ones,
-        and dropped for dirs that left the manifest (compaction).
-        Plans are reused, not data: nothing is persisted. ``lane``
-        keeps the untyped and typed reads of one store apart. Racing
-        callers may each build a union, but every stored entry is one
-        consistent (keys, scans, union) tuple, so a race costs a
-        rebuild, never a frame of another file set."""
-        from functools import reduce
+    def _scan(self, lane: str, members: tuple, schema_of) -> DataFrame:
+        """One scan per group of live members, unioned by name, built
+        once per ``members``: one ``(dir, schema key)`` pair per live
+        dir in manifest order. A group is what one scan has to pin: the
+        schema ``schema_of(key)``, and whether the member has an
+        event_date level (a flat ``z`` snapshot in a partitioned scan
+        raises "Conflicting partition column names"). Plans are reused,
+        not data. ``lane`` keeps untyped and typed reads apart.
 
-        cached_keys, cached, union = self._unions.get(lane, ((), {}, None))
-        if keys == cached_keys:
-            return union
-        scans = {k: cached[k] if k in cached else scan(k) for k in keys}
-        union = reduce(
-            lambda a, b: a.unionByName(b, **union_kw), (scans[k] for k in keys)
-        )
-        self._unions[lane] = (keys, scans, union)
-        return union
+        Explicit schema, never inference: a committed EMPTY epoch dir
+        holds only _SUCCESS, where inference would raise "Unable to
+        infer schema" and poison every read of the store; pinned, it is
+        just an empty scan."""
+        cached = self._frames.get(lane)
+        if cached is not None and cached[0] == members:
+            return cached[1]
+        groups: dict[tuple, list[str]] = {}
+        for d, key in members:
+            flat = os.path.basename(d).startswith(f"member={_FLAT}")
+            groups.setdefault((key, flat), []).append(d)
+        frame = None
+        for (key, _flat), dirs in groups.items():
+            schema = schema_of(key)
+            scan = self.spark.read.schema(schema).option("basePath", self._data).parquet(*dirs)
+            scan = scan.select(*schema.fieldNames())
+            frame = scan if frame is None else frame.unionByName(scan, allowMissingColumns=True)
+        self._frames[lane] = (members, frame)
+        return frame
 
     def replay(self, table: str, action: str | None, t0, t1) -> DataFrame:
         """Events for a topic within [t0, t1), ts order — meepo's
@@ -294,24 +293,29 @@ class TransactionalEventStore:
     # --- maintenance --------------------------------------------------
     def compact_txn(self) -> DataFrame:
         """Compaction with an atomic manifest swap: write the latest
-        image per (table, pk) to a NEW snapshot dir, then replace the
-        live file set in one manifest version. Late redeliveries of
+        image per (table, pk) of the members it read to a NEW snapshot
+        dir, then replace exactly those members in one manifest version
+        (epochs committed meanwhile stay live after the snapshot; a
+        rival compaction that won first raises ConcurrentCommitError
+        and leaves this snapshot an orphan). Late redeliveries of
         pre-compaction epochs stay no-ops (epoch ids are retained)."""
+        read = self.commits.files()
+        latest = _latest_image(self._log(read), LOG_SCHEMA.fieldNames())
         snap_dir = self._snapshot_dir()
-        latest = _latest_image(self.log(), LOG_SCHEMA.fieldNames())
         latest.write.mode("overwrite").partitionBy("event_date").parquet(snap_dir)
-        self.commits.compact([snap_dir], {"snapshot": snap_dir})
+        self.commits.compact([snap_dir], {"snapshot": snap_dir}, replaces=read)
         return self.log()
 
     def vacuum_orphans(self, grace_seconds: float = 86400.0) -> list[str]:
-        """Reclaim attempt dirs no live manifest references: losing
-        same-epoch writers, crashed pre-commit writers, and
-        pre-compaction epoch dirs the snapshot replaced. Only dirs
-        whose NEWEST file is older than ``grace_seconds`` go — an
-        in-flight writer that finished its parquet but has not yet
-        won its manifest commit has fresh mtimes and survives (the
-        Delta VACUUM retention discipline, filesystem-mtime flavored).
-        Returns the removed paths.
+        """Reclaim member dirs under ``data/`` that no live manifest
+        references: losing same-epoch writers, crashed pre-commit
+        writers, crashed or losing compactions' snapshots, and the
+        members a snapshot replaced. Only dirs whose NEWEST file is
+        older than ``grace_seconds`` go — an in-flight writer that
+        finished its parquet but has not yet won its manifest commit
+        has fresh mtimes and survives (the Delta VACUUM retention
+        discipline, filesystem-mtime flavored). Returns the removed
+        paths.
 
         Grace-window CONTRACT (tests/test_commit_log.py concurrency
         matrix): ``grace_seconds`` must exceed BOTH (a) the longest
@@ -329,23 +333,11 @@ class TransactionalEventStore:
 
         live = {os.path.normpath(f) for f in self.commits.files()}
         now = time.time()
-        candidates: list[str] = []
-        data_root = os.path.join(self.path, "data")
-        if os.path.isdir(data_root):
-            for e in sorted(os.listdir(data_root)):
-                ed = os.path.join(data_root, e)
-                if e.startswith("epoch=") and os.path.isdir(ed):
-                    candidates.extend(
-                        os.path.join(ed, a) for a in sorted(os.listdir(ed))
-                    )
-        snap_root = os.path.join(self.path, "snapshots")
-        if os.path.isdir(snap_root):
-            candidates.extend(
-                os.path.join(snap_root, s) for s in sorted(os.listdir(snap_root))
-            )
         dropped: list[str] = []
-        for d in candidates:
-            if os.path.normpath(d) in live or not os.path.isdir(d):
+        members = sorted(os.listdir(self._data)) if os.path.isdir(self._data) else []
+        for m in members:
+            d = os.path.join(self._data, m)
+            if not m.startswith("member=") or os.path.normpath(d) in live or not os.path.isdir(d):
                 continue
             newest = max(
                 (
@@ -359,16 +351,6 @@ class TransactionalEventStore:
                 continue
             shutil.rmtree(d)
             dropped.append(d)
-        if os.path.isdir(data_root):  # clear now-empty epoch= parents
-            for e in sorted(os.listdir(data_root)):
-                ed = os.path.join(data_root, e)
-                if e.startswith("epoch=") and os.path.isdir(ed) and not os.listdir(ed):
-                    try:
-                        os.rmdir(ed)
-                    except OSError:
-                        pass  # a live writer created a new attempt dir
-                        # between the emptiness check and the rmdir
-                        # (code-review r7 #2) — leave it for next time
         return dropped
 
 
@@ -473,41 +455,42 @@ class TypedTransactionalEventStore(TransactionalEventStore):
         return out
 
     def typed_log(self) -> DataFrame:
-        """Committed rows with the PERSISTED typed lane. Each dir scans
-        under the exact schema of the version it was written with
-        (pinned, never inferred), then mixed versions re-merge by name
-        — the superset struct of the newest version involved, old
-        epochs null-filled. Cached like ``log()``, keyed on the
-        ``(dir, registry_version)`` pairs of the live file set."""
-        fv = self._file_versions()
+        """Committed rows with the PERSISTED typed lane. One scan per
+        registry version that is live (usually one), each under the
+        exact schema that version was written with (pinned, never
+        inferred), then mixed versions re-merge by name — the superset
+        struct of the newest version involved, old epochs null-filled.
+        Cached like ``log()``, keyed on the ``(dir, registry_version)``
+        pairs of the live file set."""
+        return self._typed_log(self._file_versions())
+
+    def _typed_log(self, fv: list[tuple[str, int]]) -> DataFrame:
         if not fv:
             return self.spark.createDataFrame([], self.typed_schema(max(self.registry)))
+        return self._scan("typed", tuple(fv), self.typed_schema)
 
-        def scan(dv: tuple[str, int]) -> DataFrame:
-            d, v = dv
-            schema = self.typed_schema(v)
-            return self.spark.read.schema(schema).parquet(d).select(*schema.fieldNames())
-
-        return self._union_of("typed", tuple(fv), scan, allowMissingColumns=True)
-
-    def _latest_typed(self) -> tuple[DataFrame, int]:
+    def _latest_typed(self) -> tuple[DataFrame, DataFrame, int, list[str]]:
         """The latest-image merge over the typed log, KEEPING row_t —
         written as the max-version superset struct the merged typed
-        log already carries. Shared by both compaction layouts."""
+        log already carries. Shared by both compaction layouts.
+        Returns (typed log read, latest images, snapshot version,
+        members read)."""
         fv = self._file_versions()
         snap_version = max((v for _, v in fv), default=max(self.registry))
         cols = self.typed_schema(snap_version).fieldNames()
-        return _latest_image(self.typed_log(), cols), snap_version
+        log = self._typed_log(fv)
+        return log, _latest_image(log, cols), snap_version, [d for d, _ in fv]
 
     def compact_txn(self) -> DataFrame:
         """Typed compaction: latest non-delete image per (table, pk)
         KEEPING row_t, and the snapshot's manifest records the version
-        so typed_log keeps working after the swap."""
-        latest, snap_version = self._latest_typed()
+        so typed_log keeps working after the swap. Replaces exactly
+        the members it read, as the untyped ``compact_txn`` does."""
+        _, latest, snap_version, read = self._latest_typed()
         snap_dir = self._snapshot_dir()
         latest.write.mode("overwrite").partitionBy("event_date").parquet(snap_dir)
         self.commits.compact(
-            [snap_dir], {"snapshot": snap_dir, "registry_version": snap_version}
+            [snap_dir], {"snapshot": snap_dir, "registry_version": snap_version}, replaces=read
         )
         return self.typed_log()
 
@@ -541,15 +524,13 @@ class TypedTransactionalEventStore(TransactionalEventStore):
         anyway; byte sizing comes from the manifest's live files, not
         a count heuristic."""
         import math
-        import os
 
         from meepo_spark.operators.layout import ZBITS, _bucket, clustered_write
 
-        latest, snap_version = self._latest_typed()
-        live = self.commits._read()["files"]
+        log, latest, snap_version, read = self._latest_typed()
         live_bytes = sum(
             os.path.getsize(os.path.join(root, f))
-            for d in live
+            for d in read
             for root, _, fs in os.walk(d)
             for f in fs
             if f.endswith(".parquet")
@@ -558,7 +539,7 @@ class TypedTransactionalEventStore(TransactionalEventStore):
         # by the survivor ratio (two count aggs; compaction is a rare
         # maintenance job) so files land near target even when the log
         # is mostly superseded versions
-        log_rows = self.typed_log().count()
+        log_rows = log.count()
         latest_rows = latest.count()
         est = live_bytes * latest_rows / max(log_rows, 1)
         n_files = max(1, math.ceil(est / target_bytes))
@@ -584,7 +565,7 @@ class TypedTransactionalEventStore(TransactionalEventStore):
         lo, hi = with_pk.agg(F.min("pk_num"), F.max("pk_num")).first()
         if lo is None:  # empty store: degenerate but valid layout
             lo, hi = 0, 1
-        snap_dir = self._snapshot_dir()
+        snap_dir = self._snapshot_dir(_FLAT)
         # table rank rides the SECOND interleave lane (whose bit i
         # lands at position 2i+1 — including the TOP bit), so the file
         # order is table-major: "rebuild table X" — the dominant
@@ -608,5 +589,6 @@ class TypedTransactionalEventStore(TransactionalEventStore):
                     "target_bytes": target_bytes,
                 },
             },
+            replaces=read,
         )
         return snap_dir, n_out

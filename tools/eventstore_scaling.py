@@ -2,29 +2,33 @@
 manifest-driven read path's cost as epochs accumulate, and compaction
 restoring it.
 
-TransactionalEventStore.log() unions one pruned scan per committed
-epoch dir, so the PLAN grows with epochs-since-compaction while the
-DATA stays the same size. This probe quantifies that trade on the
-sf0.1 events fixture:
+TransactionalEventStore.log() reads every committed member dir (one
+per epoch since the last compaction, plus the snapshot) as the paths
+of ONE pruned parquet scan under the store's ``data/`` root, so more
+epochs mean more, smaller files in that scan while the DATA stays the
+same size. This probe quantifies that trade on the sf0.1 events
+fixture:
 
 * append wall per epoch (manifest commit is O(1): one JSON rewrite +
   dir fsync — the parquet write dominates);
 * log().count() wall at 1 / 8 / 16 / 32 / 64 accumulated epochs — the
-  union-width cost curve a deployment uses to pick its compaction
-  cadence;
-* replay() wall on a 1-day time window at max width (partition
-  pruning must hold through the union);
-* compact_txn() wall, then log().count() and replay() again at
-  union width 1 — the restored floor.
+  cost curve in live members a deployment uses to pick its
+  compaction cadence (each read after a commit builds a new frame,
+  so its file listing is in the number);
+* replay() wall on a 1-day time window at the most members (partition
+  pruning must hold across them);
+* compact_txn() wall, then log().count() and replay() again at one
+  live member — the restored floor.
 
 The 100 TB reading: epoch count is a CADENCE knob, not a data-volume
-knob — a store ingesting 100 TB at 64 epochs/day pays the same plan
-width as this probe; what grows is per-epoch bytes, which the
-per-epoch parquet scan parallelizes. The number that must NOT grow
+knob — a store ingesting 100 TB at 64 epochs/day lists the same
+number of member dirs as this probe; what grows is per-epoch bytes,
+which the one scan splits into tasks. The number that must NOT grow
 with data volume is the manifest commit itself (two filesystem ops).
 
-Usage: python tools/eventstore_scaling.py [sf_dir] [epochs]
-       (defaults: /root/testdata/sf0.1, 64)
+Usage: SPARK_GRAFT_CPUS=4 python tools/eventstore_scaling.py [sf_dir] [epochs]
+       (defaults: the sf0.1 fixture, 64 epochs; SPARK_GRAFT_CPUS sets
+       local[N])
 Prints one JSON line per measurement.
 """
 
@@ -88,7 +92,7 @@ def main(sf_dir: str, n_epochs: int) -> int:
                     json.dumps(
                         {
                             "probe": "eventstore_epochs",
-                            "union_width": width,
+                            "live_members": width,
                             "rows_visible": n,
                             "log_count_s": round(read_s, 3),
                             "replay_1d_s": round(replay_s, 3),
@@ -125,7 +129,7 @@ def main(sf_dir: str, n_epochs: int) -> int:
             json.dumps(
                 {
                     "probe": "eventstore_compacted",
-                    "union_width": 1,
+                    "live_members": 1,
                     "rows_visible": n,
                     "compact_s": round(compact_s, 3),
                     "log_count_s": round(read_s, 3),
